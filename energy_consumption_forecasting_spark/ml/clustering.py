@@ -5,7 +5,8 @@ Reference: PCA(k=3) (ts_kmeans_base.ipynb:940-951), TimeSeriesKMeans
 (n_clusters, metric="dtw") (K:1942-1944,2023-2025), silhouette
 (K:1945-1946,2026-2027).
 
-MLlib covers PCA / euclidean KMeans / silhouette JVM-side.  DTW has no
+PCA, euclidean KMeans and silhouette live in ``queries/ml_queries``
+(in-plan PCA fold, MLlib KMeans, exact silhouette frame).  DTW has no
 MLlib form: the distance matrix is computed distributed (one pandas-UDF
 task per series-pair block), and only the k-medoids assignment loop —
 O(n_series²) on a ≤105-month matrix — runs on the driver, per SURVEY
@@ -18,35 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def assemble(df: DataFrame, cols: list[str], output_col: str = "features") -> DataFrame:
-    from pyspark.ml.feature import VectorAssembler
-
-    return VectorAssembler(inputCols=cols, outputCol=output_col).transform(df)
-
-
-def fit_pca(df: DataFrame, cols: list[str], k: int = 3):
-    """MLlib PCA over assembled features; returns (model, projected df)."""
-    from pyspark.ml.feature import PCA
-
-    assembled = assemble(df, cols)
-    model = PCA(k=k, inputCol="features", outputCol="pca").fit(assembled)
-    return model, model.transform(assembled)
-
-
-def fit_kmeans(df: DataFrame, cols: list[str], k: int = 12, seed: int = 42):
-    """MLlib KMeans (euclidean baseline for M5) + silhouette score."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.evaluation import ClusteringEvaluator
-
-    assembled = assemble(df, cols)
-    model = KMeans(k=k, seed=seed, featuresCol="features").fit(assembled)
-    clustered = model.transform(assembled)
-    silhouette = ClusteringEvaluator(
-        featuresCol="features", predictionCol="prediction", metricName="silhouette"
-    ).evaluate(clustered)
-    return model, clustered, float(silhouette)
 
 
 def _dtw(a: np.ndarray, b: np.ndarray) -> float:

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..session import ensure_utc
-from ..tables import load_table
+from ..tables import load_table, scan_row_groups
 
 
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -13,41 +13,24 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def fanout(
-    df: DataFrame,
-    cols: str | list[str] = "doc_id",
-    gate: bool = True,
-) -> DataFrame:
+def fanout(df: DataFrame, cols: str | list[str] = "doc_id") -> DataFrame:
     """Unsplittable-source fan-out: repartition to default parallelism
-    before a compute-heavy row-local stage — but ONLY when the scan is
-    not already parallel (``gate=True``, the default).
+    before a compute-heavy row-local stage — but ONLY when the scan
+    cannot run in parallel by itself.
 
-    The testdata parquet files are single row groups below the split
-    size, so Spark cannot split the scan — without this, hash/HOF-heavy
+    The rule: spread iff the parquet files under ``df.inputFiles()``
+    hold fewer row groups than ``defaultParallelism``
+    (``tables.scan_row_groups``; a non-local source counts as
+    splittable).  The testdata parquet files are single row groups, so
+    Spark cannot split the scan — without the spread, hash/HOF-heavy
     projections run as ONE task (measured: minhash sketches 2.7s
-    single-core → ~0.6s spread over 32).  The repartition is NOT free
-    where the source is splittable: it is a full shuffle write+fetch of
-    the source bytes, exactly the exchange a properly-split source
-    never needs (r10 verdict item 1 — the earlier "harmless extra
-    map-side pass" claim here was wrong).  So the gate reads the scan
-    parallelism ``tables.load_table`` stamped on the frame
-    (``_sg_scan_parts``, a driver-side re-run of Spark's own file-split
-    algorithm over os.stat sizes — zero py4j cost; an RDD-probe
-    alternative measured ~105 ms per call) and returns ``df`` unchanged
-    when the scan already yields at least ``defaultParallelism``
-    partitions: at 100 TB the gate always skips, on the single-
-    row-group testdata it always fires.  Row-local downstream math is
-    unaffected by the reordering either way.  NOTE: python attributes
-    do not survive narrow ops, so gated call sites must wrap the
-    ``tbl(...)`` frame itself (select/filter AFTER fanout — Catalyst
-    pushes both below the repartition, the plan is identical); a frame
-    without the tag repartitions unconditionally, the historical
-    behavior.
-
-    ``gate=False`` keeps the unconditional spread for MID-PLAN callers
-    (the basket pre-explode width fix): the spread there exists to
-    redistribute rows before an O(k²) explode, not to split a scan, so
-    it must always run regardless of the input's width.
+    single-core → ~0.6s spread over 32).  Where the source is
+    splittable the repartition is NOT free: it is a full shuffle
+    write+fetch of the source bytes, exactly the exchange a
+    properly-split source never needs (r10 verdict item 1), so
+    ``df`` comes back unchanged.  ``inputFiles()`` survives
+    select/filter, so the rule holds after narrow ops.  Row-local
+    downstream math is unaffected by the reordering either way.
 
     ``cols=None`` spreads ROUND-ROBIN instead of hash-partitioning: a
     keyed fanout forces its key columns into the scan's ReadSchema
@@ -62,26 +45,12 @@ def fanout(
     no extra ReadSchema column, no map-side sort, retry-safe (the key
     derives from row content, not ``rand()``)."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if gate:
-        n_scan = getattr(df, "_sg_scan_parts", None)
-        if n_scan is not None and n_scan >= target:
-            return df
+    if scan_row_groups(df, target) >= target:
+        return df
     if cols is None:
         return df.repartition(target)
     cols = [cols] if isinstance(cols, (str, Column)) else cols
     return df.repartition(target, *cols)
-
-
-def scan_tagged(src: DataFrame, out: DataFrame) -> DataFrame:
-    """Propagate ``load_table``'s ``_sg_scan_parts`` scan-parallelism
-    tag across a NARROW transform (select/filter — partition count is
-    unchanged by either), so :func:`fanout`'s splittability gate still
-    sees it.  Python attributes do not survive DataFrame methods, which
-    otherwise silently degrades the gate to "always repartition"."""
-    tag = getattr(src, "_sg_scan_parts", None)
-    if tag is not None:
-        out._sg_scan_parts = tag
-    return out
 
 
 import threading

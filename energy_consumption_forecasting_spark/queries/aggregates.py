@@ -273,8 +273,8 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fanout (r10, guide §2.5/§6): the single-row-group testdata scan
     # runs the whole 8-aggregate decimal map side on ONE task (stage
     # profile: 1.8 s CPU, 3 tasks, one doing all the work); spread the
-    # filtered rows first — at 100 TB the source is splittable and the
-    # exchange is one harmless extra map pass (fanout contract).
+    # filtered rows first — at 100 TB the source is splittable and
+    # fanout skips the spread (fanout contract).
     # Spread key: xxhash64 over measure columns the aggregate already
     # reads (guide §2.5 deterministic synthetic key).  Round-robin
     # (cols=None) was the first fix, but a keyless repartition pays a
@@ -283,10 +283,6 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fanout 1.15 s.  The hash key adds no ReadSchema column (the
     # plan-contract test pins 7) and decimal sums are exact under any
     # row placement.
-    # fanout wraps the SCAN frame (the splittability gate reads the
-    # load_table tag, which narrow ops drop); Catalyst pushes the
-    # shipdate filter below the repartition, so the physical plan is
-    # unchanged (plan-contract test pins PushedFilters + ReadSchema).
     li = fanout(
         tbl(spark, sf_dir, "lineitem"),
         cols=[F.xxhash64("l_quantity", "l_extendedprice", "l_discount", "l_tax")],

@@ -167,8 +167,9 @@ def _pairs_from_members(members: DataFrame) -> DataFrame:
 # With 0 <= doc_a < doc_b < 2^31 (member lists are array_sort'ed int
 # ids) the pair packs EXACTLY into one int64 as doc_a*2^31 + doc_b —
 # a 24->16 byte exchange row and a one-long hash-agg key.  Ids at or
-# past 2^31 fail fast in-plan rather than wrap silently (wider corpora
-# must widen the pack).  div/mod invert the pack, so unpacked output
+# past 2^31, or negative (truncating div/mod would not invert them),
+# fail fast in-plan rather than wrap silently (wider corpora must
+# widen the pack).  div/mod invert the pack, so unpacked output
 # is bit-identical to the unpacked aggregation.
 _PAIR_PACK = 1 << 31
 
@@ -179,12 +180,12 @@ def _packed_pairs_from_members(members: DataFrame) -> DataFrame:
     pairs) enter the downstream distinct/count exchange."""
     return _pairs_from_members(members).select(
         F.when(
-            F.col("doc_b") < F.lit(_PAIR_PACK),
+            (F.col("doc_a") >= 0) & (F.col("doc_b") < F.lit(_PAIR_PACK)),
             F.col("doc_a") * F.lit(_PAIR_PACK) + F.col("doc_b"),
         )
         .otherwise(
             F.raise_error(
-                F.lit("doc pair key >= 2^31: widen the pair packing")
+                F.lit("doc pair key outside [0, 2^31): widen the pair packing")
             ).cast("long")
         )
         .alias("pk")
@@ -446,11 +447,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
         .filter(F.size("docs") >= 2)
     )
-    # pair packing A/B'd here and LOST (r11, /tmp committed to
-    # OPTIMIZATION_r11.md: min 1.47 -> 1.70 s at sf1 interleaved) — the
-    # distinct's partial agg already collapses map-side, so the packed
-    # key saved nothing and the guard+pack projection cost showed; the
-    # COUNT aggregations below keep the pack (ngram min 11.3 -> 9.6 s).
+    # pair packing A/B'd here and LOST (r11, interleaved at sf1: min
+    # 1.47 -> 1.70 s) — the distinct's partial agg already collapses
+    # map-side, so the packed key saved nothing and the guard+pack
+    # projection cost showed; the COUNT aggregations below keep the
+    # pack (same A/B, ngram: min 11.3 -> 9.6 s).
     cand = _pairs_from_members(members).distinct()
     sa = sigs.alias("sa")
     sb = sigs.alias("sb")
@@ -2243,11 +2244,11 @@ def pipeline_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
         .filter(F.size("docs") >= 2)
     )
-    # pair packing A/B'd here and LOST (r11, /tmp committed to
-    # OPTIMIZATION_r11.md: min 1.47 -> 1.70 s at sf1 interleaved) — the
-    # distinct's partial agg already collapses map-side, so the packed
-    # key saved nothing and the guard+pack projection cost showed; the
-    # COUNT aggregations below keep the pack (ngram min 11.3 -> 9.6 s).
+    # pair packing A/B'd here and LOST (r11, interleaved at sf1: min
+    # 1.47 -> 1.70 s) — the distinct's partial agg already collapses
+    # map-side, so the packed key saved nothing and the guard+pack
+    # projection cost showed; the COUNT aggregations below keep the
+    # pack (same A/B, ngram: min 11.3 -> 9.6 s).
     cand = _pairs_from_members(members).distinct()
     splits = tbl(spark, sf_dir, "documents").select(
         "doc_id", split_col().alias("split")

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from . import query
 from ..functions.vectors import as_double, cosine
-from ._util import fanout, scan_tagged, shared_frame, shared_persist, shared_plan, tbl
+from ._util import fanout, shared_frame, shared_persist, shared_plan, tbl
 
 N_QUERIES = 5
 TOP_K = 5
@@ -341,8 +341,9 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME fit frame and hash-pins metric + recall."""
     from ..operators.ann import ivf_assign_lazy, ivf_search_lazy
 
-    raw = tbl(spark, sf_dir, "embeddings")
-    e = scan_tagged(raw, raw.select("vec_id", as_double("embedding").alias("v")))
+    e = tbl(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
     fit = _ivf_fit_shared(spark, sf_dir, e)
     # fanout (r10 second pass): the single-row-group scan ran the whole
     # cell-assign + search pipeline as ONE task (warm stage profile:
@@ -482,8 +483,9 @@ def sim_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_topk_table_lazy,
     )
 
-    raw = tbl(spark, sf_dir, "embeddings")
-    e = scan_tagged(raw, raw.select("vec_id", as_double("embedding").alias("v")))
+    e = tbl(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
     fit = _opq_fit_shared(spark, sf_dir, e)
     # fanout: spread the 1-task rotate + encode (see sim_ivf_topk note)
     encoded = pq_encode_lazy(
@@ -639,8 +641,9 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization arithmetic, zero construction jobs, hash unchanged."""
     from ..operators.ann import sq8_encode_lazy, sq8_topk_lazy
 
-    raw = tbl(spark, sf_dir, "embeddings")
-    e = scan_tagged(raw, raw.select("vec_id", as_double("embedding").alias("v")))
+    e = tbl(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
     encoded = sq8_encode_lazy(
         fanout(e, "vec_id"), _sq8_fit_shared(spark, sf_dir, e)
     )
@@ -665,8 +668,9 @@ def sim_sq8_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         sq8_ivf_topk_lazy,
     )
 
-    raw = tbl(spark, sf_dir, "embeddings")
-    e = scan_tagged(raw, raw.select("vec_id", as_double("embedding").alias("v")))
+    e = tbl(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
     ivf_fit = _ivf_fit_shared(spark, sf_dir, e)
     # fanout once, shared by both join branches (see sim_ivfpq_topk)
     ec = fanout(e, "vec_id")
@@ -1553,8 +1557,9 @@ def emb_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import plane_dots_arrow
     from ._jl_signs import JL_SIGNS
 
-    raw = tbl(spark, sf_dir, "embeddings")
-    e = scan_tagged(raw, raw.select("vec_id", as_double("embedding").alias("v")))
+    e = tbl(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
     # r10 (guide §4.2): the projection fold runs in one Arrow pass
     # (bit-identical per-dimension accumulation, /4 exact) instead of
     # 16 interpreted HOF folds per row; construction is one py4j call

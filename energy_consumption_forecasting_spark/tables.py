@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import glob as _glob
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -68,6 +69,29 @@ def probe_arrow_schema(path: str):
             raise FileNotFoundError(f"no parquet part files under {path}")
         return pq.read_schema(parts[0])
     return pq.read_schema(path)
+
+
+def scan_row_groups(df: DataFrame, enough: int) -> int:
+    """Row groups in the parquet files ``df`` scans (``df.inputFiles()``,
+    which survives select/filter), summed until ``enough`` is reached.
+
+    A row group is the unit a parquet scan can run in parallel: byte
+    splits beyond the row groups are empty tasks.  A file outside the
+    local ``file`` scheme counts as ``enough`` — a remote or
+    distributed source is taken to be splittable, the safe default at
+    scale.  A frame with no input files counts zero.  Footers are read
+    with pyarrow, as in :func:`probe_arrow_schema`."""
+    import pyarrow.parquet as pq
+
+    total = 0
+    for uri in df.inputFiles():
+        url = urlparse(uri)
+        if url.scheme not in ("", "file"):
+            return enough
+        total += pq.read_metadata(unquote(url.path)).num_row_groups
+        if total >= enough:
+            break
+    return total
 
 
 def _ts_kind(arrow_type) -> str:
@@ -147,96 +171,13 @@ def load_events(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def _size_bytes(conf_val: str) -> int:
-    """Parse a Spark size conf ('128m', '4194304b', '134217728')."""
-    s = str(conf_val).strip().lower()
-    units = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    if s and s[-1] in units:
-        return int(float(s[:-1]) * units[s[-1]])
-    return int(s)
-
-
-_SCAN_PARTS_CACHE: dict = {}
-
-
-def est_scan_partitions(spark: SparkSession, path: str) -> int | None:
-    """Driver-side estimate of the scan parallelism a parquet path
-    yields — Spark's own split algorithm (FilePartition.getFilePartitions
-    / FilePartition.maxSplitBytes, public source) re-run over os.stat
-    sizes, so the gate in ``queries._util.fanout`` costs ZERO py4j
-    round-trips per call (a ``df.rdd.getNumPartitions()`` probe measured
-    ~105 ms/call — 35 gated sites × 3 bench reps would be ~10 s of pure
-    probe tax).  Calibrated against the real RDD partition count on the
-    testdata tables and multi-file fixtures (tests/test_plan_contracts).
-    Returns None for non-local paths (caller then skips the gate and
-    repartitions, the historical behavior)."""
-    p = path[7:] if path.startswith("file://") else path
-    try:
-        if os.path.isdir(p):
-            names = set(_glob.glob(os.path.join(p, "*.parquet"))) | set(
-                _glob.glob(os.path.join(p, "part-*"))
-            )
-            files = [os.path.getsize(f) for f in names]
-        else:
-            files = [os.path.getsize(p)]
-    except OSError:
-        return None
-    if not files:
-        return None
-    max_part = _size_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-    )
-    open_cost = _size_bytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4m")
-    )
-    min_parts = spark.sparkContext.defaultParallelism
-    key = (
-        spark.sparkContext.applicationId,
-        p,
-        tuple(sorted(files)),
-        max_part,
-        open_cost,
-        min_parts,
-    )
-    hit = _SCAN_PARTS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    total = sum(files) + open_cost * len(files)
-    bytes_per_core = total // max(min_parts, 1)
-    max_split = min(max_part, max(open_cost, bytes_per_core))
-    # per-file byte-range splits, then the greedy descending pack
-    splits: list[int] = []
-    for size in files:
-        off = 0
-        while off < size:
-            splits.append(min(max_split, size - off))
-            off += max_split
-    splits.sort(reverse=True)
-    n, cur = 0, 0
-    for s in splits:
-        if cur and cur + s > max_split:
-            n, cur = n + 1, 0
-        cur += s + open_cost
-    if cur:
-        n += 1
-    if len(_SCAN_PARTS_CACHE) > 256:
-        _SCAN_PARTS_CACHE.clear()
-    _SCAN_PARTS_CACHE[key] = n
-    return n
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     if name == "events":
-        df = load_events(spark, path)
-    else:
-        df = _read_parquet(spark, path, _footer_spark_schema(path))
-    # scan-parallelism tag for queries._util.fanout's splittability gate
-    # (narrow ops drop python attributes, so fanout must wrap THIS frame)
-    df._sg_scan_parts = est_scan_partitions(spark, path)
-    return df
+        return load_events(spark, path)
+    return _read_parquet(spark, path, _footer_spark_schema(path))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -1,10 +1,14 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# import the checkout these tests live in, wherever it is
+REPO_ROOT = Path(__file__).resolve().parents[1]
+TOOLS_DIR = str(REPO_ROOT / "tools")
+sys.path.insert(0, str(REPO_ROOT))
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"

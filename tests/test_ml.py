@@ -243,7 +243,9 @@ def test_label_folds_raw_frame_never_single_partitions(spark):
     hard guard does."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    from tests.conftest import TOOLS_DIR
+
+    sys.path.insert(0, TOOLS_DIR)
     from plan_audit import audit_unpartitioned_windows
 
     raw = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")

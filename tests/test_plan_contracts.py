@@ -100,7 +100,9 @@ def test_unpartitioned_window_guard(spark):
     raw table, tolerated above an Aggregate or a literal frame."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    from tests.conftest import TOOLS_DIR
+
+    sys.path.insert(0, TOOLS_DIR)
     from plan_audit import audit_unpartitioned_windows
 
     from pyspark.sql import Window
@@ -139,7 +141,9 @@ def test_unpartitioned_window_guard_rdd_leaf_attribution(spark):
     window over it."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    from tests.conftest import TOOLS_DIR
+
+    sys.path.insert(0, TOOLS_DIR)
     from plan_audit import audit_unpartitioned_windows
 
     from pyspark.sql import Window
@@ -189,7 +193,9 @@ def test_calendar_bounded_window_contract_all_queries(spark):
     any of these windows at a raw fact table and this fails."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    from tests.conftest import TOOLS_DIR
+
+    sys.path.insert(0, TOOLS_DIR)
     from plan_audit import audit_unpartitioned_windows
 
     from energy_consumption_forecasting_spark.queries import load_all
@@ -214,89 +220,123 @@ def test_calendar_bounded_window_contract_all_queries(spark):
     )
 
 
-# --- fanout splittability gate (r11 verdict item 3) ---------------------------
+# --- fanout splittability rule (r11 verdict item 3) ---------------------------
 #
 # The scan-site fanout exists ONLY because the testdata parquet is a
 # single unsplittable row group: at 100 TB the source is splittable and
 # the repartition would be a full extra exchange of the fact table.
-# These tests pin both sides of the gate: the single-split testdata
-# keeps the spread, a multi-file (splittable) source skips it — and the
-# pure-python split estimator that drives the gate matches Spark's real
-# partition count so the decision is made from true scan parallelism.
+# The rule: spread iff the parquet files under df.inputFiles() hold
+# fewer row groups than defaultParallelism; a non-local source counts
+# as splittable.  These tests pin both sides of the rule.
+
+
+def _write_parts(spark, path, n_files, partition_by=None):
+    """``n_files`` one-row-group parquet part files under ``path``."""
+    from pyspark.sql import functions as F
+
+    df = (
+        spark.range(0, 20_000)
+        .withColumn("doc_id", F.col("id"))
+        .withColumn("k", F.col("id") % 2)
+        .repartition(n_files)
+    )
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(path)
 
 
 def test_fanout_gate_skips_on_splittable_source(spark, tmp_path):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from energy_consumption_forecasting_spark.tables import est_scan_partitions
     from energy_consumption_forecasting_spark.queries._util import fanout
 
     target = spark.sparkContext.defaultParallelism
-    # enough part files that the packed split count clears the session
-    # parallelism; scan confs pinned small so the fixture stays tiny
-    # (default 4 MB openCost packs ~3 small files per split, capping
-    # the partition count below 32 for any uniform small-file layout)
-    path = os.path.join(str(tmp_path), "wide.parquet")
-    spark.range(0, 200_000).withColumn(
-        "doc_id", F.col("id")
-    ).repartition(2 * target + 8).write.mode("overwrite").parquet(path)
-
-    old_max = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    old_open = spark.conf.get("spark.sql.files.openCostInBytes")
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "131072")
-        spark.conf.set("spark.sql.files.openCostInBytes", "1024")
-        est = est_scan_partitions(spark, path)
-        wide = spark.read.parquet(path)
-        actual = wide.rdd.getNumPartitions()
-        assert est == actual, f"estimator {est} != actual {actual}"
-        assert actual >= target
-
-        wide._sg_scan_parts = est
-        assert fanout(wide, "doc_id") is wide, "gate failed to skip"
-        # ungated callers (mid-plan pre-explode spreads) still spread
-        assert fanout(wide, "doc_id", gate=False) is not wide
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old_max)
-        spark.conf.set("spark.sql.files.openCostInBytes", old_open)
+    path = str(tmp_path / "wide.parquet")
+    _write_parts(spark, path, target + 2)
+    wide = spark.read.parquet(path)
+    assert fanout(wide, "doc_id") is wide, "spread a multi-row-group scan"
+    # the rule reads inputFiles(), which survives narrow ops
+    narrowed = wide.select("doc_id").filter("doc_id > 5")
+    assert fanout(narrowed, "doc_id") is narrowed
 
 
 def test_fanout_gate_keeps_spread_on_unsplittable_source(spark):
     from energy_consumption_forecasting_spark.queries._util import fanout, tbl
-    from energy_consumption_forecasting_spark.tables import est_scan_partitions
 
     docs = tbl(spark, SF_SMALL, "documents")
-    assert docs._sg_scan_parts == est_scan_partitions(
-        spark, f"{SF_SMALL}/documents.parquet"
-    )
-    assert docs._sg_scan_parts < spark.sparkContext.defaultParallelism
     spread = fanout(docs)
     assert spread is not docs
     assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    narrowed = docs.select("doc_id", "text")
+    assert fanout(narrowed) is not narrowed
 
 
-def test_scan_partition_estimator_matches_spark(spark):
-    """Calibration: the driver-side re-run of Spark's file-split
-    algorithm must equal df.rdd.getNumPartitions() on every testdata
-    table (single file) — the layouts the gate actually sees."""
-    from energy_consumption_forecasting_spark.tables import (
-        TABLE_NAMES,
-        est_scan_partitions,
-        load_table,
+def test_fanout_spreads_one_row_group_file_split_by_bytes(spark, tmp_path):
+    """A single row group larger than maxPartitionBytes yields many
+    byte splits but only one of them reads rows: the spread stays."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from energy_consumption_forecasting_spark.queries._util import fanout
+
+    target = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "one_group.parquet")
+    n = 200_000
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(n), pa.int64())}),
+        path,
+        row_group_size=n,
+        compression="none",
     )
+    assert pq.read_metadata(path).num_row_groups == 1
+    split = os.path.getsize(path) // (2 * target)
+    old_max = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() >= target  # byte splits, not rows
+        assert fanout(df, "doc_id") is not df
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old_max)
 
-    for name in TABLE_NAMES:
-        df = load_table(spark, SF_SMALL, name)
-        est = est_scan_partitions(spark, f"{SF_SMALL}/{name}.parquet")
-        actual = df.rdd.getNumPartitions()
-        assert est == actual, f"{name}: est {est} != actual {actual}"
+
+def test_fanout_skips_on_remote_source(spark, monkeypatch):
+    from energy_consumption_forecasting_spark.queries._util import fanout, tbl
+
+    docs = tbl(spark, SF_SMALL, "documents")
+    monkeypatch.setattr(
+        docs, "inputFiles", lambda: ["s3a://bucket/documents.parquet"]
+    )
+    assert fanout(docs) is docs
+
+
+def test_fanout_skips_on_hive_partitioned_tree(spark, tmp_path):
+    from energy_consumption_forecasting_spark.queries._util import fanout
+
+    target = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "hive.parquet")
+    _write_parts(spark, path, target, partition_by="k")
+    assert (tmp_path / "hive.parquet" / "k=1").is_dir()
+    tree = spark.read.parquet(path)
+    assert len(tree.inputFiles()) >= target
+    assert fanout(tree, "doc_id") is tree
+
+
+def test_tbl_accepts_size_conf_with_unit_suffix(spark):
+    """Spark reads '128mb' as 128 MiB; constructing a scan must too."""
+    from energy_consumption_forecasting_spark.queries._util import tbl
+
+    old_max = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "128mb")
+        assert tbl(spark, SF_SMALL, "lineitem").columns
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old_max)
 
 
 def test_q1_filter_pushes_below_fanout_exchange(spark):
-    """tpch_q1's shipdate filter sits AFTER the gated fanout in source
-    order (the fanout must wrap the scan frame to see the gate tag);
+    """tpch_q1's shipdate filter sits AFTER the fanout in source order;
     Catalyst must still push it into the scan."""
     plan = _plan(spark, "tpch_q1_pricing_summary")
     pushed = re.findall(r"PushedFilters: \[([^\]]+)\]", plan)

@@ -1187,3 +1187,35 @@ def test_bucket_pair_scores_match_join_distinct_reference(spark):
     )
     for k, v in want.items():
         assert got[k] == v, f"cos mismatch {k}: {got[k]!r} vs {v!r}"
+
+
+def test_pair_pack_rejects_negative_keys(spark):
+    """Spark's div/% truncate toward zero, so a negative key packed as
+    p1*2^31 + p2 would unpack to a different pair: both pair packers
+    must fail fast instead, and keep packing in-range keys exactly."""
+    from energy_consumption_forecasting_spark.queries.basket import (
+        pair_counts_from_lines,
+    )
+    from energy_consumption_forecasting_spark.queries.dedup import (
+        _packed_pairs_from_members,
+        _unpack_pairs,
+    )
+
+    lines = spark.createDataFrame(
+        [(b, i) for b in (1, 2) for i in (-5, 3)],
+        "l_orderkey long, l_partkey long",
+    )
+    with pytest.raises(Exception, match="widen the pair packing"):
+        pair_counts_from_lines(lines).collect()
+
+    members = spark.createDataFrame([([-5, 3],)], "docs array<long>")
+    with pytest.raises(Exception, match="widen the pair packing"):
+        _packed_pairs_from_members(members).collect()
+
+    top = (1 << 31) - 1
+    members = spark.createDataFrame([([0, 7, top],)], "docs array<long>")
+    got = {
+        (r["doc_a"], r["doc_b"])
+        for r in _unpack_pairs(_packed_pairs_from_members(members)).collect()
+    }
+    assert got == {(0, 7), (0, top), (7, top)}
