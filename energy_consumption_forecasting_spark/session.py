@@ -43,8 +43,21 @@ def get_spark(
     * Arrow on: pandas UDF / toPandas interop is batched, not per-row.
     * UTC session timezone: timestamp→date semantics must not depend on
       the host machine's zone.
+    * PySpark call-site capture off
+      (``spark.python.sql.dataFrameDebugging.enabled=false``).  With it
+      on, every DataFrame and Column call costs ~5 extra py4j round
+      trips and loads IPython into the driver; turning it off halves the
+      py4j commands of a query's construction.  What is lost: the
+      PySpark call site in an error's query context.  Get it back with
+      ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+      "true"}``.  ``ensure_utc`` cannot switch it off for a session the
+      driver hands in: PySpark caches the flag per process on first use.
+    * ``local[N]`` with N = ``$SPARK_GRAFT_CPUS``, else the CPUs this
+      process may run on.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 32)
     builder = (
@@ -59,6 +72,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in _OPTIMIZER_TUNING.items():
         builder = builder.config(k, v)

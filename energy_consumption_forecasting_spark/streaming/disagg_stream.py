@@ -58,8 +58,4 @@ def run_disagg_daily_available_now(
             maxFilesPerTrigger=max_files_per_trigger,
         ),
         "disagg",
-        # per-day demand state: key cardinality is calendar-bounded
-        # (one row per order date) at ANY corpus scale — 8 stores
-        # suffice and the 32-store default was pure open/commit tax
-        partitions=8,
     )

@@ -95,3 +95,52 @@ def test_stream_twin_equals_batch_query(spark):
         for r in qs["w18_disaggregation"](spark, SF_SMALL).collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_drain_runs_one_store_per_task_slot_and_returns_sink_frame(spark):
+    """The drain pins one state store per task slot, restores the
+    session's shuffle width, and hands back the memory-sink frame
+    itself: it still collects after the sink's view is dropped."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from energy_consumption_forecasting_spark.streaming.disagg_stream import (
+        run_disagg_daily_available_now,
+    )
+
+    class StoreWidths(StreamingQueryListener):
+        def __init__(self):
+            self.widths = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            ops = event.progress.stateOperators
+            if ops:
+                self.widths.append(ops[0].numShufflePartitions)
+
+        def onQueryTerminated(self, event):
+            pass
+
+    width_before = spark.conf.get("spark.sql.shuffle.partitions")
+    listener = StoreWidths()
+    spark.streams.addListener(listener)
+    try:
+        out = run_disagg_daily_available_now(spark, SF_SMALL)
+        deadline = time.time() + 30
+        while not listener.widths and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+
+    assert listener.widths
+    assert set(listener.widths) == {spark.sparkContext.defaultParallelism}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width_before
+    assert not [t for t in spark.catalog.listTables() if t.name.startswith("disagg_")]
+    first = {(r["d"], str(r["demand"])) for r in out.collect()}
+    second = {(r["d"], str(r["demand"])) for r in out.collect()}
+    want = {
+        (r["d"], str(r["demand"]))
+        for r in _batch_daily(spark, f"{SF_SMALL}/orders.parquet").collect()
+    }
+    assert first == second == want and len(want) > 0

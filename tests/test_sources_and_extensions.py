@@ -283,7 +283,7 @@ def test_stream_checkpoint_no_reprocessing(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
     counts = []
-    with pinned_stream_partitions(spark, 4):
+    with pinned_stream_partitions(spark):
         for _ in range(2):
             q = (
                 dedup_stream(spark, SF_SMALL, "documents.parquet")

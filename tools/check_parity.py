@@ -16,8 +16,9 @@ import math
 import sys
 import time
 import traceback
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 STRICT = False

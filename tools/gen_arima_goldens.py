@@ -17,10 +17,11 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from energy_consumption_forecasting_spark.ml.forecast import (  # noqa: E402
     _css_refine,

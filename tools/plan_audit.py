@@ -13,8 +13,9 @@ import contextlib
 import io
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 AUDITED = [
     # NOTE: driver-composed gates (modularity, lsh/ann quality) are
